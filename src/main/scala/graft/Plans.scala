@@ -26,11 +26,7 @@ object Plans {
     // — a lazy-materializer dump shows the full operator pipeline where
     // the default eager localCheckpoint would print an opaque
     // Scan ExistingRDD over the already-materialized index
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    ConfOverrides.applyEnv(spark)
     val sb = new StringBuilder
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       sb.append(s"\n${"=" * 72}\n== $name\n${"=" * 72}\n")

@@ -27,13 +27,8 @@ object ProbeOpt {
         .config("spark.eventLog.compress", "false")
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // session-conf overrides for A/B probes, e.g.
-    // SPARK_GRAFT_CONF="graft.clusters.roundsPerHop=1;other=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    // session-conf overrides for A/B probes
+    ConfOverrides.applyEnv(spark)
     spark.range(1000000).selectExpr("sum(id * 2)")
       .write.format("noop").mode("overwrite").save()
     graft.sources.Tables.all.foreach { t =>
